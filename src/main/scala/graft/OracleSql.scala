@@ -6,8 +6,9 @@ import graft.index.Fieldnorm
 /** Generates the DuckDB oracle SQL that mirrors the engine's BM25
   * pipeline exactly: same tokenizer (Analyzer.tokensSqlDuck), same
   * SmallFloat fieldnorm quantization (Fieldnorm.encodeSql/decodeSql),
-  * same double-precision BM25 arithmetic as Scorer.scoreF64. Scores are
-  * rounded to 4 decimals on both sides before the driver's hash compare.
+  * same double-precision BM25 arithmetic as the f64 exhaustive kernel
+  * (Scorer, Precision.F64). Scores are rounded to 4 decimals on both
+  * sides before the driver's hash compare.
   *
   * Scope note: DuckDB's `levenshtein` is BYTE-based while the engine
   * (matching Spark's builtin) counts codepoints, so the fuzzy/lev/

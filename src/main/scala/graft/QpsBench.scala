@@ -111,14 +111,14 @@ object QpsBench {
     val (_, tBatch) = Bench.time(
       engine.searchManyF32(batch, 10, wandStats = Some(bStats)).collect())
 
-    // A/B: the pre-pruning exhaustive batch merge (decode EVERY matched
-    // block once, replay per query — Scorer.scoreManyF32) vs the
+    // A/B: the pre-pruning exhaustive batch kernel (decode EVERY matched
+    // block once, replay per query — Scorer.scoreMany) vs the
     // shared-cache block-max path the engine now serves (Wand.topKMany):
     // same plans, same output, the delta is pure block skipping
     val cqs = batch.map(_._1).zip(engine.compileMany(batch.map(_._2)))
       .filter(_._2.terms.nonEmpty)
     def runExhaustive(): Unit = Scorer.topKPerQuery(
-      Scorer.scoreManyF32(idx, cqs, 10).toDF("qid", "docId", "score"),
+      Scorer.scoreMany(idx, cqs, 10, Precision.F32),
       10, org.apache.spark.sql.functions.col("score")).collect()
     runExhaustive() // warm-up
     val (_, tBatchEx) = Bench.time(runExhaustive())
@@ -133,7 +133,7 @@ object QpsBench {
     val cqsSkew = skew.map(_._1).zip(engine.compileMany(skew.map(_._2)))
       .filter(_._2.terms.nonEmpty)
     def runSkewExhaustive(): Unit = Scorer.topKPerQuery(
-      Scorer.scoreManyF32(idx, cqsSkew, 10).toDF("qid", "docId", "score"),
+      Scorer.scoreMany(idx, cqsSkew, 10, Precision.F32),
       10, org.apache.spark.sql.functions.col("score")).collect()
     runSkewExhaustive() // warm-up
     val (_, tSkewEx) = Bench.time(runSkewExhaustive())

@@ -1,7 +1,8 @@
 package graft.query
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 import graft.analyze.{Analyzer, Levenshtein, SymSpell}
@@ -691,45 +692,21 @@ final class QueryEngine(val index: BuiltIndex) {
   def searchF32(clauses: Seq[SearchClause], k: Int = DefaultLimit, useWand: Boolean = true,
       wandStats: Option[Wand.Stats] = None): DataFrame = {
     // LIMIT 0 is legal SQL and must return zero rows, not crash the
-    // WAND tasks (PriorityQueue rejects initialCapacity < 1)
-    if (k <= 0) return emptyResultF32
+    // WAND tasks (a zero-capacity TopKHeap cannot hold a candidate)
+    if (k <= 0) return emptyResult(Precision.F32, batch = false)
     def build: DataFrame = {
       val cq = compile(clauses)
-      if (cq.terms.isEmpty) return emptyResultF32
+      if (cq.terms.isEmpty) return emptyResult(Precision.F32, batch = false)
       val scored =
-        if (useWand && cq.groups.size == 1 && !cq.groups.head.constScore && disjSelective(cq))
-          Wand.topK(index, cq, k, deletesDs, wandStats)
-        else if (useWand && cq.groups.size > 1 && cq.groups.forall(_.required) && conjSelective(cq))
-          Wand.topKConj(index, cq, k, deletesDs, wandStats)
-        else Scorer.scoreF32(index, cq, deletesDs)
-      Scorer.topK(scored.toDF("docId", "score"), k)
+        if (useWand && Wand.disjSelective(cq, index.numDocs))
+          Wand.topK(index, cq, k, deletesDs, wandStats).toDF("docId", "score")
+        else if (useWand && Wand.conjSelective(cq, index.numDocs))
+          Wand.topKConj(index, cq, k, deletesDs, wandStats).toDF("docId", "score")
+        else Scorer.scoreMany(index, Seq(0 -> cq), k, Precision.F32, deletesDs)
+          .select(col("docId"), col("score"))
+      Scorer.topK(scored, k)
     }
     if (wandStats.isEmpty) cachedPlan((clauses, k, useWand))(build) else build
-  }
-
-  /** Cost gate for single-group (disjunction) WAND, mirroring
-    * conjSelective: block-max skips happen when at least one term is
-    * selective — its high-idf hits push the top-k threshold above the
-    * dense terms' block maxima (93% of the hot term's blocks skipped on
-    * the rare+hot shape at 2M docs, BENCH.md). A uniformly dense
-    * disjunction (every term hot) never lifts the threshold past any
-    * block max, skips nothing, and pays pure cursor bookkeeping
-    * (measured 0.94x vs exhaustive) — route it to the exhaustive
-    * hash scorer instead.
-    */
-  private def disjSelective(cq: CompiledQuery): Boolean =
-    cq.terms.map(_.df).min * 4 <= index.numDocs
-
-  /** Cost gate for conjunction WAND: leapfrog + block-max pays off when
-    * at least one required group is selective (the intersection is
-    * sparse and the other groups' blocks get skipped between its
-    * postings — measured 1.8x at 2M docs). A dense-x-dense conjunction
-    * has nothing to skip and the per-candidate bookkeeping just loses
-    * to the exhaustive hash scorer (measured +24%), so it stays there.
-    */
-  private def conjSelective(cq: CompiledQuery): Boolean = {
-    val minGroupDf = cq.groups.map(g => cq.terms.filter(_.group == g.id).map(_.df).sum).min
-    minGroupDf * 4 <= index.numDocs
   }
 
   /** (docId, score double) — oracle-parity path. Top-k selection runs
@@ -754,20 +731,15 @@ final class QueryEngine(val index: BuiltIndex) {
     * bit-identical to searchF32 (BatchSearchSpec). Shard-local
     * per-query heaps bound the exchange at (#shards x #queries x k)
     * rows, and compileMany coalesces the dictionary jobs, so total job
-    * count is O(1) in batch width. Block-max pruning applies PER QUERY
-    * on top of the shared decode (Wand.topKMany): every query runs the
-    * algorithm the single-query path would pick for it, all queries of
-    * a shard draw blocks from one lazy cache, and a block decodes only
-    * if ANY query of the batch actually lands on it.
+    * count is O(1) in batch width. At large corpora, WAND-routable
+    * queries instead take block-max pruning on top of a shared decode
+    * (Wand.topKMany): all queries of a shard draw blocks from one lazy
+    * cache, and a block decodes only if ANY of them actually lands on it.
     */
   def searchManyF32(queries: Seq[(Int, Seq[SearchClause])], k: Int = DefaultLimit,
       wandStats: Option[Wand.Stats] = None): DataFrame = {
-    require(queries.map(_._1).distinct.size == queries.size, "qids must be unique")
-    // every scoring task carries every query's compiled plan in its
-    // closure — bounded here so a runaway batch degrades loudly into
-    // "chunk your batch", not into silent multi-MB task binaries
-    require(queries.size <= MaxBatchWidth, s"batch wider than $MaxBatchWidth: chunk it")
-    if (k <= 0) return emptyResultQF32
+    checkBatch(queries)
+    if (k <= 0) return emptyResult(Precision.F32, batch = true)
     // the split-floor conf resolves BEFORE the plan-cache lookup and
     // rides the key: a conf flip between identical batches must
     // re-plan, not serve the other regime's routing
@@ -779,12 +751,11 @@ final class QueryEngine(val index: BuiltIndex) {
 
   private def searchManyF32Build(queries: Seq[(Int, Seq[SearchClause])], k: Int,
       wandStats: Option[Wand.Stats], splitMinDocs: Long): DataFrame = {
-    val cqs = queries.map(_._1).zip(compileMany(queries.map(_._2)))
-    val nonEmpty = cqs.filter(_._2.terms.nonEmpty)
-    if (nonEmpty.isEmpty) return emptyResultQF32
+    val nonEmpty = compileBatch(queries)
+    if (nonEmpty.isEmpty) return emptyResult(Precision.F32, batch = true)
     // partition the batch by WAND routability: sparse queries take the
     // shared-cache pruned pass (Wand.topKMany), dense ones the
-    // exhaustive hash replay (Scorer.scoreManyF32) — per-query WAND
+    // exhaustive kernel (Scorer.scoreMany) — per-query WAND
     // bookkeeping at batch-width x shard-count scale only pays on
     // sparse match sets (Wand.batchWandRoutable). Terms shared across
     // the two subsets decode once per pass; the split is driver-side
@@ -797,7 +768,7 @@ final class QueryEngine(val index: BuiltIndex) {
     // skippable blocks — q_batch32 regressed 125 -> 104 qps at 50k docs
     // when the split landed, while the same split wins 1.38x on the 27M
     // Zipf mix (BENCH.md). Below the floor the whole batch takes the
-    // exhaustive replay (the r4-proven single-job path, bit-identical
+    // exhaustive kernel (the r4-proven single-job path, bit-identical
     // per BatchSearchSpec). Scale-adaptive (derived from the corpus,
     // not local core count) and conf-overridable for tests/tuning.
     val (sparse, dense) =
@@ -809,7 +780,7 @@ final class QueryEngine(val index: BuiltIndex) {
         Some(Wand.topKMany(index, sparse, k, deletesDs, wandStats).toDF("qid", "docId", "score"))
       else None,
       if (dense.nonEmpty)
-        Some(Scorer.scoreManyF32(index, dense, k, deletesDs).toDF("qid", "docId", "score"))
+        Some(Scorer.scoreMany(index, dense, k, Precision.F32, deletesDs))
       else None).flatten
     Scorer.topKPerQuery(frames.reduce(_ unionByName _), k, col("score"))
   }
@@ -820,30 +791,40 @@ final class QueryEngine(val index: BuiltIndex) {
     * and the global per-qid selection.
     */
   def searchManyF64(queries: Seq[(Int, Seq[SearchClause])], k: Int = DefaultLimit): DataFrame = {
-    require(queries.map(_._1).distinct.size == queries.size, "qids must be unique")
-    require(queries.size <= MaxBatchWidth, s"batch wider than $MaxBatchWidth: chunk it")
-    val cqs = queries.map(_._1).zip(compileMany(queries.map(_._2)))
-    val nonEmpty = cqs.filter(_._2.terms.nonEmpty)
-    if (nonEmpty.isEmpty) return emptyResultQF64
-    val scored = Scorer.scoreManyF64(index, nonEmpty, k, deletesDs).toDF("qid", "docId", "score")
-    Scorer.topKPerQuery(scored, k, round(col("score"), 4))
+    checkBatch(queries)
+    val nonEmpty = compileBatch(queries)
+    if (nonEmpty.isEmpty) return emptyResult(Precision.F64, batch = true)
+    Scorer.topKPerQuery(Scorer.scoreMany(index, nonEmpty, k, Precision.F64, deletesDs),
+      k, round(col("score"), 4))
   }
 
-  /** Unlimited (docId, score float) match set on the rank-identity path. */
-  def matchF32(clauses: Seq[SearchClause]): DataFrame = {
-    val cq = compile(clauses)
-    if (cq.terms.isEmpty) return emptyResultF32
-    Scorer.scoreF32(index, cq, deletesDs).toDF("docId", "score")
+  private def checkBatch(queries: Seq[(Int, Seq[SearchClause])]): Unit = {
+    require(queries.map(_._1).distinct.size == queries.size, "qids must be unique")
+    // every scoring task carries every query's compiled plan in its
+    // closure — bounded here so a runaway batch degrades loudly into
+    // "chunk your batch", not into silent multi-MB task binaries
+    require(queries.size <= MaxBatchWidth, s"batch wider than $MaxBatchWidth: chunk it")
   }
+
+  /** The batch's compiled queries that have terms, tagged with their qids. */
+  private def compileBatch(queries: Seq[(Int, Seq[SearchClause])]): Seq[(Int, CompiledQuery)] =
+    queries.map(_._1).zip(compileMany(queries.map(_._2))).filter(_._2.terms.nonEmpty)
+
+  /** Unlimited (docId, score float) match set on the rank-identity path. */
+  def matchF32(clauses: Seq[SearchClause]): DataFrame = matchAll(clauses, Precision.F32)
 
   /** Unlimited (docId, score double) match set (facet counting, custom
     * ordering at the call site).
     */
   def matchF64(clauses: Seq[SearchClause], threshold: Option[Double] = None): DataFrame = {
-    val cq = compile(clauses)
-    if (cq.terms.isEmpty) return emptyResultF64
-    val scored = Scorer.scoreF64(index, cq, deletesDs).toDF("docId", "score")
+    val scored = matchAll(clauses, Precision.F64)
     threshold.map(t => scored.filter(col("score") > lit(t))).getOrElse(scored)
+  }
+
+  private def matchAll(clauses: Seq[SearchClause], precision: Precision): DataFrame = {
+    val cq = compile(clauses)
+    if (cq.terms.isEmpty) emptyResult(precision, batch = false)
+    else Scorer.scoreAll(index, cq, precision, deletesDs)
   }
 
   /** Join scored docIds back to stored fields (the only docId join the
@@ -895,28 +876,13 @@ final class QueryEngine(val index: BuiltIndex) {
       .groupBy(col("facet")).agg(count(lit(1)).as("cnt"))
   }
 
-  private def emptyResultF32: DataFrame = {
-    val spark = index.spark
-    import spark.implicits._
-    spark.emptyDataset[ScoredDocF32].toDF("docId", "score")
-  }
-
-  private def emptyResultF64: DataFrame = {
-    val spark = index.spark
-    import spark.implicits._
-    spark.emptyDataset[ScoredDocF64].toDF("docId", "score")
-  }
-
-  private def emptyResultQF32: DataFrame = {
-    val spark = index.spark
-    import spark.implicits._
-    spark.emptyDataset[ScoredQDocF32].toDF("qid", "docId", "score")
-  }
-
-  private def emptyResultQF64: DataFrame = {
-    val spark = index.spark
-    import spark.implicits._
-    spark.emptyDataset[ScoredQDocF64].toDF("qid", "docId", "score")
+  /** Zero-row frame typed like the scorers' output: (docId, score), or
+    * (qid, docId, score) for a batch. */
+  private def emptyResult(precision: Precision, batch: Boolean): DataFrame = {
+    val cols = Seq(StructField("docId", LongType, nullable = false),
+      StructField("score", precision.scoreType, nullable = false))
+    index.spark.createDataFrame(java.util.Collections.emptyList[Row](),
+      StructType(if (batch) StructField("qid", IntegerType, nullable = false) +: cols else cols))
   }
 }
 
@@ -1012,7 +978,7 @@ object SearchDefaults {
     * query's compiled plan; wider workloads chunk into several passes). */
   final val MaxBatchWidth = 4096
   /** Corpus-size floor below which searchManyF32 skips the sparse/dense
-    * split and routes the WHOLE batch through the exhaustive replay (one
+    * split and routes the WHOLE batch through the exhaustive kernel (one
     * Spark job instead of two). Measured (same methodology, local[32]):
     * at 50k docs the split's second job cost ~35% of batch latency for
     * nothing to skip; at 2M x 64-query Zipf the split still LOSES 13%

@@ -1,9 +1,12 @@
 package graft.query
 
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType, FloatType}
 
-import graft.index.{BuiltIndex, PostingCodec, PostingRow}
+import graft.index.{BuiltIndex, DecodedBlock, PostingCodec, PostingRow}
 
 /** A compiled search term: one dictionary term contributing to one
   * clause group. `weightF32` is the full precomputed BM25 term weight
@@ -33,9 +36,26 @@ final case class CompiledQuery(terms: Seq[CompiledTerm], groups: Seq[CompiledGro
 }
 
 final case class ScoredDocF32(docId: Long, score: Float)
-final case class ScoredDocF64(docId: Long, score: Double)
 final case class ScoredQDocF32(qid: Int, docId: Long, score: Float)
-final case class ScoredQDocF64(qid: Int, docId: Long, score: Double)
+
+/** One row of the exhaustive kernel. The score is widened to double at
+  * either precision (exact for f32); the drivers cast it back to the
+  * precision's column type.
+  */
+final case class ScoredHit(qid: Int, docId: Long, score: Double)
+
+/** Accumulator precision of the exhaustive kernel. `F32` is the
+  * rank-identity path (tantivy arithmetic); `F64` mirrors the DuckDB
+  * oracle SQL in pure double math (see SparkEntry.oracleSql).
+  */
+sealed abstract class Precision(val scoreType: DataType,
+    private[query] val accumulator: (Int, Map[String, Scorer.NormCache]) => Scorer.Acc)
+    extends Serializable
+
+object Precision {
+  case object F32 extends Precision(FloatType, new Scorer.AccF32(_, _))
+  case object F64 extends Precision(DoubleType, new Scorer.AccF64(_, _))
+}
 
 /** Distributed scoring over the sharded posting lists.
   *
@@ -100,10 +120,10 @@ object Scorer {
     * must meet their shard's rows in one task).
     *
     * Exactness: `f` receives exactly the matched rows of one shard in
-    * both shapes, and every scorer sorts its rows internally before
+    * both shapes, and every scorer orders its rows internally before
     * accumulating, so per-query results are bit-identical (gated by
-    * the fast-vs-fallback spec in SearchSpec/BatchSearchSpec and by
-    * every oracle row, which runs through the in-memory fast path).
+    * the fast-vs-fallback spec in BatchSearchSpec and by every oracle
+    * row, which runs through the in-memory fast path).
     */
   def shardGrouped[T](index: BuiltIndex, terms: Seq[CompiledTerm],
       deletes: Option[Dataset[Long]])(
@@ -140,129 +160,17 @@ object Scorer {
     }
   }
 
-  /** Exhaustive f32 path: tantivy-arithmetic scores, deterministic
-    * accumulation order (groups/terms sorted), exact conjunction masks.
+  /** Per-field BM25 norm denominators at both precisions. */
+  final case class NormCache(f32: Array[Float], f64: Array[Double])
+
+  /** field -> norm cache for every field `terms` score: the prologue
+    * every scorer shares, computed driver-side and shipped in the task
+    * closure (256 entries per precision and field).
     */
-  def scoreF32(index: BuiltIndex, cq: CompiledQuery,
-      deletes: Option[Dataset[Long]] = None): Dataset[ScoredDocF32] = {
-    val spark = index.spark
-    import spark.implicits._
-    val weights: Map[(String, String, Int), Float] =
-      cq.terms.map(t => (t.field, t.term, t.group) -> t.weightF32).toMap
-    val groupOf: Map[(String, String), Seq[Int]] =
-      cq.terms.groupBy(t => (t.field, t.term)).map { case (k, v) => k -> v.map(_.group).sorted }
-    val constMask = cq.groups.filter(_.constScore).map(g => 1 << g.id).sum
-    val reqMask = cq.requiredMask
-    val caches: Map[String, Array[Float]] =
-      cq.terms.map(_.field).distinct.map(f => f -> Bm25.normCacheF32(index.avgFieldnormF32(f))).toMap
-    val shardDocs = index.config.shardDocs // capture: closures must not drag BuiltIndex in
-    shardGrouped(index, cq.terms, deletes) { (rows, dels) =>
-      mergeShardF32(rows, weights, groupOf, caches, constMask, reqMask, dels, shardDocs)
-    }
-  }
-
-  private def mergeShardF32(
-      rows: Array[PostingRow],
-      weights: Map[(String, String, Int), Float],
-      groupOf: Map[(String, String), Seq[Int]],
-      caches: Map[String, Array[Float]],
-      constMask: Int,
-      reqMask: Int,
-      deleted: Set[Long],
-      shardDocs: Int): Iterator[ScoredDocF32] = {
-    // deterministic accumulation order: (minGroup, field, term)
-    val sorted = rows.sortBy(p => (groupOf((p.field, p.term)).min, p.field, p.term))
-    if (sorted.isEmpty) return Iterator.empty
-    // a shard is a contiguous docId range of width shardDocs: dense
-    // flat arrays indexed by (docId - base) beat a boxing HashMap by
-    // an order of magnitude in the per-hit hot loop
-    val base = sorted(0).shard.toLong * shardDocs
-    val score = new Array[Float](shardDocs)
-    val mask = new Array[Int](shardDocs)
-    sorted.foreach { p =>
-      val cache = caches(p.field)
-      val dec = PostingCodec.decodeAll(p.bytes, p.blockOffset, p.blockLast)
-      groupOf((p.field, p.term)).foreach { g =>
-        val gBit = 1 << g
-        val isConst = (constMask & gBit) != 0
-        val w = weights((p.field, p.term, g))
-        var i = 0
-        while (i < dec.docIds.length) {
-          val o = (dec.docIds(i) - base).toInt
-          if (isConst) {
-            if ((mask(o) & gBit) == 0) score(o) += 1.0f
-          } else {
-            score(o) += Bm25.tfScoreF32(w, dec.tfs(i), cache(dec.norms(i)))
-          }
-          mask(o) |= gBit
-          i += 1
-        }
-      }
-    }
-    (0 until shardDocs).iterator
-      .filter(o => (mask(o) & reqMask) == reqMask && mask(o) != 0 && !deleted.contains(base + o))
-      .map(o => ScoredDocF32(base + o, score(o)))
-  }
-
-  /** Oracle-parity f64 path: identical structure, pure double math
-    * (mirrors the DuckDB oracle SQL exactly; see SparkEntry.oracleSql).
-    */
-  def scoreF64(index: BuiltIndex, cq: CompiledQuery,
-      deletes: Option[Dataset[Long]] = None): Dataset[ScoredDocF64] = {
-    val spark = index.spark
-    import spark.implicits._
-    val weights: Map[(String, String, Int), Double] =
-      cq.terms.map(t => (t.field, t.term, t.group) -> t.weightF64).toMap
-    val groupOf: Map[(String, String), Seq[Int]] =
-      cq.terms.groupBy(t => (t.field, t.term)).map { case (k, v) => k -> v.map(_.group).sorted }
-    val constMask = cq.groups.filter(_.constScore).map(g => 1 << g.id).sum
-    val reqMask = cq.requiredMask
-    val caches: Map[String, Array[Double]] =
-      cq.terms.map(_.field).distinct.map(f => f -> Bm25.normCacheF64(index.avgFieldnormF64(f))).toMap
-    val shardDocs = index.config.shardDocs
-    shardGrouped(index, cq.terms, deletes) { (rows, dels) =>
-      mergeShardF64(rows, weights, groupOf, caches, constMask, reqMask, dels, shardDocs)
-    }
-  }
-
-  private def mergeShardF64(
-      rows: Array[PostingRow],
-      weights: Map[(String, String, Int), Double],
-      groupOf: Map[(String, String), Seq[Int]],
-      caches: Map[String, Array[Double]],
-      constMask: Int,
-      reqMask: Int,
-      deleted: Set[Long],
-      shardDocs: Int): Iterator[ScoredDocF64] = {
-    val sorted = rows.sortBy(p => (groupOf((p.field, p.term)).min, p.field, p.term))
-    if (sorted.isEmpty) return Iterator.empty
-    val base = sorted(0).shard.toLong * shardDocs
-    val score = new Array[Double](shardDocs)
-    val mask = new Array[Int](shardDocs)
-    sorted.foreach { p =>
-      val cache = caches(p.field)
-      val dec = PostingCodec.decodeAll(p.bytes, p.blockOffset, p.blockLast)
-      groupOf((p.field, p.term)).foreach { g =>
-        val gBit = 1 << g
-        val isConst = (constMask & gBit) != 0
-        val w = weights((p.field, p.term, g))
-        var i = 0
-        while (i < dec.docIds.length) {
-          val o = (dec.docIds(i) - base).toInt
-          if (isConst) {
-            if ((mask(o) & gBit) == 0) score(o) += 1.0d
-          } else {
-            score(o) += Bm25.tfScoreF64(w, dec.tfs(i), cache(dec.norms(i)))
-          }
-          mask(o) |= gBit
-          i += 1
-        }
-      }
-    }
-    (0 until shardDocs).iterator
-      .filter(o => (mask(o) & reqMask) == reqMask && mask(o) != 0 && !deleted.contains(base + o))
-      .map(o => ScoredDocF64(base + o, score(o)))
-  }
+  def normCaches(index: BuiltIndex, terms: Seq[CompiledTerm]): Map[String, NormCache] =
+    terms.map(_.field).distinct.map(f => f -> NormCache(
+      Bm25.normCacheF32(index.avgFieldnormF32(f)),
+      Bm25.normCacheF64(index.avgFieldnormF64(f)))).toMap
 
   /** Global top-k with the engine's total order (score desc, docId asc
     * — tantivy breaks score ties by doc address; we pin docId,
@@ -272,37 +180,177 @@ object Scorer {
   def topK(scored: DataFrame, k: Int): DataFrame =
     scored.orderBy(col("score").desc, col("docId").asc).limit(k)
 
-  // ------------------------------------------------------- batched path
+  // -------------------------------------------------- exhaustive kernel
 
-  /** Driver-side replay plan for ONE query of a batch: its distinct
-    * (field, term) pairs in the exact order the single-query merge
-    * accumulates them — (min group, field, term) — so per-query f32
-    * sums are bit-identical to scoreF32 (accumulation order is an
-    * engine invariant; see mergeShardF32).
+  /** Every live match of one query, (docId, score) at `precision`'s
+    * column type: the shared kernel run as a batch of one with no heap.
     */
-  private final case class QueryPlan[@specialized(Float, Double) W](
+  def scoreAll(index: BuiltIndex, cq: CompiledQuery, precision: Precision,
+      deletes: Option[Dataset[Long]] = None): DataFrame =
+    exhaustive(index, Seq(0 -> cq), None, precision, deletes).select(col("docId"), col("score"))
+
+  /** Exhaustive top-k candidates of a batch, (qid, docId, score) at
+    * `precision`'s column type — the cluster THROUGHPUT path and the
+    * single query's exhaustive route (a batch of one). ONE pass over
+    * the union of all queries' matched postings decodes each posting
+    * row once per shard and replays it per query; shard-local per-query
+    * heaps bound the output at (#shards x #queries x k) rows, so no
+    * stage ever carries a corpus-sized per-query match set. Finish with
+    * topK (one query) or topKPerQuery.
+    */
+  def scoreMany(index: BuiltIndex, queries: Seq[(Int, CompiledQuery)], k: Int,
+      precision: Precision, deletes: Option[Dataset[Long]] = None): DataFrame =
+    exhaustive(index, queries, Some(k), precision, deletes)
+
+  private def exhaustive(index: BuiltIndex, queries: Seq[(Int, CompiledQuery)], k: Option[Int],
+      precision: Precision, deletes: Option[Dataset[Long]]): DataFrame = {
+    val spark = index.spark
+    import spark.implicits._
+    val plans = queries.map { case (qid, cq) => queryPlan(qid, cq) }.toArray
+    val allTerms = queries.flatMap(_._2.terms)
+    val caches = normCaches(index, allTerms)
+    val shardDocs = index.config.shardDocs // capture: closures must not drag BuiltIndex in
+    shardGrouped(index, allTerms, deletes) { (rows, dels) =>
+      replayShard(rows, plans, precision.accumulator(shardDocs, caches), dels, k)
+    }.toDF().withColumn("score", col("score").cast(precision.scoreType))
+  }
+
+  /** Driver-side replay plan for ONE query: its distinct (field, term)
+    * keys in accumulation order (min group, field, term), and per key
+    * its compiled terms, one per group, groups ascending.
+    */
+  private final case class QueryPlan(
       qid: Int,
-      order: Array[(String, String)],
-      groupsOf: Map[(String, String), Array[Int]],
-      weights: Map[(String, String, Int), W],
+      keys: Array[(String, String)],
+      terms: Array[Array[CompiledTerm]],
       constMask: Int,
       reqMask: Int)
 
-  private def mkPlan[W](qid: Int, cq: CompiledQuery,
-      weightOf: CompiledTerm => W): QueryPlan[W] = {
-    val groupsOf = cq.terms.groupBy(t => (t.field, t.term))
-      .map { case (key, ts) => key -> ts.map(_.group).distinct.sorted.toArray }
-    val order = groupsOf.keys.toArray.sortBy(key => (groupsOf(key)(0), key._1, key._2))
-    QueryPlan(qid, order, groupsOf,
-      cq.terms.map(t => (t.field, t.term, t.group) -> weightOf(t)).toMap,
-      cq.groups.filter(_.constScore).map(g => 1 << g.id).sum,
-      cq.requiredMask)
+  private def queryPlan(qid: Int, cq: CompiledQuery): QueryPlan = {
+    val termsOf = cq.terms.groupBy(t => (t.field, t.term))
+      .map { case (key, ts) => key -> ts.distinctBy(_.group).sortBy(_.group).toArray }
+    val keys = termsOf.keys.toArray.sortBy(key => (termsOf(key)(0).group, key._1, key._2))
+    QueryPlan(qid, keys, keys.map(termsOf),
+      cq.groups.filter(_.constScore).map(g => 1 << g.id).sum, cq.requiredMask)
+  }
+
+  /** The ONE exhaustive per-shard kernel, behind every non-WAND path
+    * (single and batched, f32 and f64). Each matched posting row
+    * decodes once per shard; every query then replays its keys in
+    * (min group, field, term) order, a key's rows in arrival order (one
+    * row per epoch segment, where a stable sort by key leaves them),
+    * and each row's groups ascending. That order is an engine
+    * invariant: it makes f32 sums bit-identical across every path and
+    * with WAND's exact scoring. With `k`, each query's live matches go
+    * through a shard-local TopKHeap; without, every live match is
+    * emitted (a shard holds at most shardDocs of them).
+    */
+  private def replayShard(rows: Array[PostingRow], plans: Array[QueryPlan], acc: Acc,
+      deleted: Set[Long], k: Option[Int]): Iterator[ScoredHit] = {
+    if (rows.isEmpty) return Iterator.empty
+    // groupBy keeps each key's rows in arrival order
+    val decoded = rows.groupBy(p => (p.field, p.term)).map { case (key, ps) =>
+      key -> ps.map(p => PostingCodec.decodeAll(p.bytes, p.blockOffset, p.blockLast)) }
+    val n = acc.size
+    val base = rows(0).shard.toLong * n
+    val out = ArrayBuffer.empty[ScoredHit]
+    plans.foreach { q =>
+      if (q.keys.exists(decoded.contains)) {
+        acc.clear()
+        for (ki <- q.keys.indices; dec <- decoded.getOrElse(q.keys(ki), Array.empty[DecodedBlock]);
+             t <- q.terms(ki))
+          acc.add(dec, base, t, (q.constMask & (1 << t.group)) != 0)
+        val heap = k.map(kk => new TopKHeap(math.max(1, math.min(kk, n))))
+        var o = 0
+        while (o < n) {
+          val m = acc.mask(o)
+          if (m != 0 && (m & q.reqMask) == q.reqMask && !deleted.contains(base + o)) heap match {
+            case Some(h) => h.offer(acc.key(o), base + o, acc.score(o))
+            case None => out += ScoredHit(q.qid, base + o, acc.score(o))
+          }
+          o += 1
+        }
+        heap.foreach(_.foreachKept((d, s) => out += ScoredHit(q.qid, d, s)))
+      }
+    }
+    out.iterator
+  }
+
+  /** Per-shard scratch of the exhaustive kernel: a score and a group
+    * mask per docId of the shard (dense arrays indexed by docId - base
+    * beat a boxing HashMap by an order of magnitude in the per-hit
+    * loop). Only `add`, the innermost posting loop, is written per
+    * precision, so each hot loop stays monomorphic.
+    */
+  private[query] abstract class Acc(val size: Int) {
+    final val mask = new Array[Int](size)
+    /** Accumulate one decoded posting row of `t` into its group's mask
+      * bit: a BM25 term score per posting, or a flat 1.0 once per doc
+      * for a const-score group. */
+    def add(dec: DecodedBlock, base: Long, t: CompiledTerm, isConst: Boolean): Unit
+    /** The score at offset `o`, widened exactly to double. */
+    def score(o: Int): Double
+    /** The shard heap's sort key at offset `o`. */
+    def key(o: Int): Double = score(o)
+    def clear(): Unit
+  }
+
+  private[query] final class AccF32(n: Int, caches: Map[String, NormCache]) extends Acc(n) {
+    private val s = new Array[Float](n)
+    def add(dec: DecodedBlock, base: Long, t: CompiledTerm, isConst: Boolean): Unit = {
+      val cache = caches(t.field).f32
+      val w = t.weightF32
+      val gBit = 1 << t.group
+      var i = 0
+      while (i < dec.docIds.length) {
+        val o = (dec.docIds(i) - base).toInt
+        if (isConst) {
+          if ((mask(o) & gBit) == 0) s(o) += 1.0f
+        } else {
+          s(o) += Bm25.tfScoreF32(w, dec.tfs(i), cache(dec.norms(i)))
+        }
+        mask(o) |= gBit
+        i += 1
+      }
+    }
+    def score(o: Int): Double = s(o)
+    def clear(): Unit = { java.util.Arrays.fill(s, 0.0f); java.util.Arrays.fill(mask, 0) }
+  }
+
+  /** f64: shard candidates are selected under the ROUNDED total order
+    * (round(score,4) desc, docId asc) the oracle presentation uses, so
+    * shard-local then global selection compose exactly.
+    */
+  private[query] final class AccF64(n: Int, caches: Map[String, NormCache]) extends Acc(n) {
+    private val s = new Array[Double](n)
+    def add(dec: DecodedBlock, base: Long, t: CompiledTerm, isConst: Boolean): Unit = {
+      val cache = caches(t.field).f64
+      val w = t.weightF64
+      val gBit = 1 << t.group
+      var i = 0
+      while (i < dec.docIds.length) {
+        val o = (dec.docIds(i) - base).toInt
+        if (isConst) {
+          if ((mask(o) & gBit) == 0) s(o) += 1.0d
+        } else {
+          s(o) += Bm25.tfScoreF64(w, dec.tfs(i), cache(dec.norms(i)))
+        }
+        mask(o) |= gBit
+        i += 1
+      }
+    }
+    def score(o: Int): Double = s(o)
+    // mirrors Spark's `round(col, 4)` on DoubleType (BigDecimal.valueOf + HALF_UP)
+    override def key(o: Int): Double =
+      java.math.BigDecimal.valueOf(s(o)).setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
+    def clear(): Unit = { java.util.Arrays.fill(s, 0.0d); java.util.Arrays.fill(mask, 0) }
   }
 
   /** Bounded per-(query, shard) top-k selection under the engine total
     * order (sort key desc, docId asc): a min-heap rooted at the worst
     * kept candidate. `raw` carries the unrounded score when the sort
-    * key is a rounded form of it (f64 oracle order).
+    * key is a rounded form of it (f64 oracle order). WAND keeps its f32
+    * scores here too: widening f32 to f64 preserves their order exactly.
     */
   private[query] final class TopKHeap(k: Int) {
     private val ks = new Array[Double](k)
@@ -311,6 +359,9 @@ object Scorer {
     private var n = 0
     @inline private def worse(k1: Double, d1: Long, k2: Double, d2: Long): Boolean =
       k1 < k2 || (k1 == k2 && d1 > d2)
+    /** Sort key a candidate must reach once the heap is full (the
+      * worst kept one), -inf before: WAND's pruning threshold. */
+    def threshold: Double = if (n < k) Double.NegativeInfinity else ks(0)
     def offer(key: Double, docId: Long, r: Double): Unit = {
       if (n < k) {
         var i = n; ks(i) = key; ds(i) = docId; raw(i) = r; n += 1
@@ -338,175 +389,6 @@ object Scorer {
     def foreachKept(f: (Long, Double) => Unit): Unit = {
       var i = 0; while (i < n) { f(ds(i), raw(i)); i += 1 }
     }
-  }
-
-  /** Mirrors Spark's `round(col, 4)` on DoubleType (BigDecimal.valueOf
-    * + HALF_UP) — the f64 batch path selects shard candidates under the
-    * SAME rounded total order the oracle presentation uses, so
-    * shard-local then global selection compose exactly.
-    */
-  @inline private def round4(x: Double): Double =
-    java.math.BigDecimal.valueOf(x).setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
-
-  /** Batched multi-query scoring — the cluster THROUGHPUT path: ONE
-    * pass over the union of all queries' matched postings, each posting
-    * block decoded once per shard and replayed per query; shard-local
-    * per-query heaps bound the output at (#shards x #queries x k) rows,
-    * so no stage ever carries a corpus-sized per-query match set.
-    */
-  def scoreManyF32(index: BuiltIndex, queries: Seq[(Int, CompiledQuery)], k: Int,
-      deletes: Option[Dataset[Long]] = None): Dataset[ScoredQDocF32] = {
-    val spark = index.spark
-    import spark.implicits._
-    val plans = queries.map { case (qid, cq) => mkPlan(qid, cq, (t: CompiledTerm) => t.weightF32) }.toArray
-    val allTerms = queries.flatMap(_._2.terms)
-    val caches: Map[String, Array[Float]] =
-      allTerms.map(_.field).distinct.map(f => f -> Bm25.normCacheF32(index.avgFieldnormF32(f))).toMap
-    val shardDocs = index.config.shardDocs
-    shardGrouped(index, allTerms, deletes) { (rows, dels) =>
-      mergeShardManyF32(rows, plans, caches, dels, shardDocs, k)
-    }
-  }
-
-  private def mergeShardManyF32(
-      rows: Array[PostingRow],
-      plans: Array[QueryPlan[Float]],
-      caches: Map[String, Array[Float]],
-      deleted: Set[Long],
-      shardDocs: Int,
-      k: Int): Iterator[ScoredQDocF32] = {
-    // decode each matched posting ONCE; every subscribing query replays
-    // from this map. A (field, term) key can hold several rows (one per
-    // epoch segment) — kept in arrival order, matching the stable sort
-    // of the single-query merge.
-    val decoded = new scala.collection.mutable.LinkedHashMap[
-      (String, String), scala.collection.mutable.ArrayBuffer[graft.index.DecodedBlock]]
-    var base = -1L
-    rows.foreach { p =>
-      if (base < 0) base = p.shard.toLong * shardDocs
-      decoded.getOrElseUpdate((p.field, p.term), scala.collection.mutable.ArrayBuffer.empty) +=
-        PostingCodec.decodeAll(p.bytes, p.blockOffset, p.blockLast)
-    }
-    if (decoded.isEmpty) return Iterator.empty
-    val score = new Array[Float](shardDocs)
-    val mask = new Array[Int](shardDocs)
-    val out = Seq.newBuilder[ScoredQDocF32]
-    plans.foreach { q =>
-      if (q.order.exists(decoded.contains)) {
-        java.util.Arrays.fill(score, 0.0f)
-        java.util.Arrays.fill(mask, 0)
-        q.order.foreach { key =>
-          decoded.get(key).foreach { blocks =>
-            val cache = caches(key._1)
-            blocks.foreach { dec =>
-              q.groupsOf(key).foreach { g =>
-                val gBit = 1 << g
-                val isConst = (q.constMask & gBit) != 0
-                val w = q.weights((key._1, key._2, g))
-                var i = 0
-                while (i < dec.docIds.length) {
-                  val o = (dec.docIds(i) - base).toInt
-                  if (isConst) {
-                    if ((mask(o) & gBit) == 0) score(o) += 1.0f
-                  } else {
-                    score(o) += Bm25.tfScoreF32(w, dec.tfs(i), cache(dec.norms(i)))
-                  }
-                  mask(o) |= gBit
-                  i += 1
-                }
-              }
-            }
-          }
-        }
-        val heap = new TopKHeap(math.max(1, math.min(k, shardDocs)))
-        var o = 0
-        while (o < shardDocs) {
-          if ((mask(o) & q.reqMask) == q.reqMask && mask(o) != 0 && !deleted.contains(base + o))
-            heap.offer(score(o).toDouble, base + o, score(o).toDouble)
-          o += 1
-        }
-        heap.foreachKept((d, s) => out += ScoredQDocF32(q.qid, d, s.toFloat))
-      }
-    }
-    out.result().iterator
-  }
-
-  /** f64 batched path (oracle parity): identical replay structure, pure
-    * double math, shard candidates selected under the ROUNDED total
-    * order (round(score,4) desc, docId asc) the oracle presentation
-    * uses.
-    */
-  def scoreManyF64(index: BuiltIndex, queries: Seq[(Int, CompiledQuery)], k: Int,
-      deletes: Option[Dataset[Long]] = None): Dataset[ScoredQDocF64] = {
-    val spark = index.spark
-    import spark.implicits._
-    val plans = queries.map { case (qid, cq) => mkPlan(qid, cq, (t: CompiledTerm) => t.weightF64) }.toArray
-    val allTerms = queries.flatMap(_._2.terms)
-    val caches: Map[String, Array[Double]] =
-      allTerms.map(_.field).distinct.map(f => f -> Bm25.normCacheF64(index.avgFieldnormF64(f))).toMap
-    val shardDocs = index.config.shardDocs
-    shardGrouped(index, allTerms, deletes) { (rows, dels) =>
-      mergeShardManyF64(rows, plans, caches, dels, shardDocs, k)
-    }
-  }
-
-  private def mergeShardManyF64(
-      rows: Array[PostingRow],
-      plans: Array[QueryPlan[Double]],
-      caches: Map[String, Array[Double]],
-      deleted: Set[Long],
-      shardDocs: Int,
-      k: Int): Iterator[ScoredQDocF64] = {
-    val decoded = new scala.collection.mutable.LinkedHashMap[
-      (String, String), scala.collection.mutable.ArrayBuffer[graft.index.DecodedBlock]]
-    var base = -1L
-    rows.foreach { p =>
-      if (base < 0) base = p.shard.toLong * shardDocs
-      decoded.getOrElseUpdate((p.field, p.term), scala.collection.mutable.ArrayBuffer.empty) +=
-        PostingCodec.decodeAll(p.bytes, p.blockOffset, p.blockLast)
-    }
-    if (decoded.isEmpty) return Iterator.empty
-    val score = new Array[Double](shardDocs)
-    val mask = new Array[Int](shardDocs)
-    val out = Seq.newBuilder[ScoredQDocF64]
-    plans.foreach { q =>
-      if (q.order.exists(decoded.contains)) {
-        java.util.Arrays.fill(score, 0.0d)
-        java.util.Arrays.fill(mask, 0)
-        q.order.foreach { key =>
-          decoded.get(key).foreach { blocks =>
-            val cache = caches(key._1)
-            blocks.foreach { dec =>
-              q.groupsOf(key).foreach { g =>
-                val gBit = 1 << g
-                val isConst = (q.constMask & gBit) != 0
-                val w = q.weights((key._1, key._2, g))
-                var i = 0
-                while (i < dec.docIds.length) {
-                  val o = (dec.docIds(i) - base).toInt
-                  if (isConst) {
-                    if ((mask(o) & gBit) == 0) score(o) += 1.0d
-                  } else {
-                    score(o) += Bm25.tfScoreF64(w, dec.tfs(i), cache(dec.norms(i)))
-                  }
-                  mask(o) |= gBit
-                  i += 1
-                }
-              }
-            }
-          }
-        }
-        val heap = new TopKHeap(math.max(1, math.min(k, shardDocs)))
-        var o = 0
-        while (o < shardDocs) {
-          if ((mask(o) & q.reqMask) == q.reqMask && mask(o) != 0 && !deleted.contains(base + o))
-            heap.offer(round4(score(o)), base + o, score(o))
-          o += 1
-        }
-        heap.foreachKept((d, s) => out += ScoredQDocF64(q.qid, d, s))
-      }
-    }
-    out.result().iterator
   }
 
   /** Per-query global top-k over the batched shard candidates: the same

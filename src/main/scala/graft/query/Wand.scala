@@ -34,6 +34,9 @@ object Wand {
       spark.sparkContext.longAccumulator("wandSkippedBlocks"))
   }
 
+  private def decodeBlock(p: PostingRow, b: Int): DecodedBlock =
+    PostingCodec.decodeBlock(p.bytes, p.blockOffset(b), if (b == 0) -1L else p.blockLast(b - 1))
+
   /** Shard-scoped lazy block store shared by every query of a batch:
     * each posting block decodes AT MOST once per shard, and only when
     * some query's execution actually lands on it — the batched analogue
@@ -54,17 +57,13 @@ object Wand {
       val arr = map.get(p)
       var d = arr(b)
       if (d == null) {
-        d = PostingCodec.decodeBlock(p.bytes, p.blockOffset(b),
-          if (b == 0) -1L else p.blockLast(b - 1))
+        d = decodeBlock(p, b)
         arr(b) = d
         decoded += 1
         stats.foreach(_.decodedBlocks.add(1L))
       }
       d
     }
-    /** Whole-row decode for the exhaustive-replay route. */
-    def decodeRow(p: PostingRow): Array[DecodedBlock] =
-      Array.tabulate(p.blockOffset.length)(b => block(p, b))
     /** Account the blocks NO query of the batch ever decoded. */
     def finish(): Unit = stats.foreach(_.skippedBlocks.add(total - decoded))
   }
@@ -78,7 +77,6 @@ object Wand {
       val p: PostingRow,
       val weight: Float,
       val cache: Array[Float],
-      val ord: Int,
       val stats: Option[Stats] = None,
       val shared: BlockCache = null) {
     private var blockIdx = 0
@@ -122,11 +120,7 @@ object Wand {
     def currentBlockLast: Long = p.blockLast(blockIdx)
 
     private def decodeCurrent(): Unit = {
-      dec =
-        if (shared != null) shared.block(p, blockIdx)
-        else PostingCodec.decodeBlock(
-          p.bytes, p.blockOffset(blockIdx),
-          if (blockIdx == 0) -1L else p.blockLast(blockIdx - 1))
+      dec = if (shared != null) shared.block(p, blockIdx) else decodeBlock(p, blockIdx)
       pos = 0
       if (shared == null) stats.foreach(_.decodedBlocks.add(1L))
     }
@@ -174,37 +168,24 @@ object Wand {
     }
   }
 
-  private final case class Hit(docId: Long, score: Float)
-
-  /** Heap entry comparison: keep the k best under (score desc, docId
-    * asc); the heap root is the *worst* kept entry.
-    */
-  private def worseThan(aScore: Float, aDoc: Long, bScore: Float, bDoc: Long): Boolean =
-    aScore < bScore || (aScore == bScore && aDoc > bDoc)
+  /** The k kept hits of a finished shard walk. */
+  private def kept(heap: Scorer.TopKHeap): Iterator[ScoredDocF32] = {
+    val out = Array.newBuilder[ScoredDocF32]
+    heap.foreachKept((d, s) => out += ScoredDocF32(d, s.toFloat))
+    out.result().iterator
+  }
 
   /** Exact per-shard top-k via WAND with block-max skipping. */
   private def wandShard(rows: Array[PostingRow], weights: Map[(String, String), Float],
-      caches: Map[String, Array[Float]], k: Int, deleted: Set[Long],
+      caches: Map[String, Scorer.NormCache], k: Int, deleted: Set[Long],
       stats: Option[Stats] = None, shared: BlockCache = null): Iterator[ScoredDocF32] = {
     // scoring order must match the exhaustive scorer: (field, term) sorted
     val sortedRows = rows.sortBy(p => (p.field, p.term))
-    val cursors = sortedRows.zipWithIndex.map { case (p, i) =>
-      new Cursor(p, weights((p.field, p.term)), caches(p.field), i,
+    val cursors = sortedRows.map { p =>
+      new Cursor(p, weights((p.field, p.term)), caches(p.field).f32,
         if (shared == null) stats else None, shared)
     }
-    val heap = new java.util.PriorityQueue[Hit](k, (a: Hit, b: Hit) =>
-      if (worseThan(a.score, a.docId, b.score, b.docId)) -1
-      else if (worseThan(b.score, b.docId, a.score, a.docId)) 1
-      else 0)
-
-    def thresholdScore: Float = if (heap.size() < k) Float.NegativeInfinity else heap.peek().score
-
-    def offer(docId: Long, score: Float): Unit = {
-      if (heap.size() < k) heap.add(Hit(docId, score))
-      else if (worseThan(heap.peek().score, heap.peek().docId, score, docId)) {
-        heap.poll(); heap.add(Hit(docId, score))
-      }
-    }
+    val heap = new Scorer.TopKHeap(k)
 
     // working order: kept nearly-sorted by curDoc across iterations, so
     // the per-iteration insertion sort is ~O(n) and the driver loop is
@@ -234,7 +215,7 @@ object Wand {
         i = 0
         while (i < nLive && p < 0) {
           ubSum += byDoc(i).remainingUB
-          if (ubSum >= thresholdScore) p = i
+          if (ubSum >= heap.threshold) p = i
           i += 1
         }
         if (p < 0) {
@@ -251,7 +232,7 @@ object Wand {
             var bmSum = 0.0f
             var j = 0
             while (j <= p) { bmSum += byDoc(j).currentBlockUB; j += 1 }
-            if (bmSum < thresholdScore) {
+            if (bmSum < heap.threshold) {
               // no doc up to the nearest block boundary can win: skip
               var boundary = Long.MaxValue
               j = 0
@@ -272,7 +253,7 @@ object Wand {
                   if (!c.done && c.curDoc == pivotDoc) s += c.curScore
                   ci += 1
                 }
-                offer(pivotDoc, s)
+                heap.offer(s, pivotDoc, s)
               }
               // all cursors at pivotDoc are the sorted prefix 0..p
               j = 0
@@ -285,8 +266,7 @@ object Wand {
         }
       }
     }
-    import scala.jdk.CollectionConverters._
-    heap.iterator().asScala.map(h => ScoredDocF32(h.docId, h.score)).toArray.iterator
+    kept(heap)
   }
 
   /** Exact per-shard top-k for multi-group ALL-REQUIRED conjunctions:
@@ -304,7 +284,7 @@ object Wand {
   private def wandShardConj(rows: Array[PostingRow],
       weights: Map[(String, String, Int), Float],
       groupOf: Map[(String, String), Seq[Int]],
-      caches: Map[String, Array[Float]],
+      caches: Map[String, Scorer.NormCache],
       constMask: Int,
       nGroups: Int,
       k: Int,
@@ -315,7 +295,7 @@ object Wand {
     if (sortedRows.isEmpty) return Iterator.empty
     val rowGroups: Array[Array[Int]] =
       sortedRows.map(p => groupOf((p.field, p.term)).sorted.toArray)
-    val cursors = sortedRows.zipWithIndex.map { case (p, i) =>
+    val cursors = sortedRows.map { p =>
       // cursor UB weight = the row's total non-const BM25 weight (its
       // whole contribution to any one doc); const groups add flat 1.0s.
       // Inflate by 1e-6 relative: the exact score sums per-group f32
@@ -328,7 +308,7 @@ object Wand {
       val wSum = groupOf((p.field, p.term)).iterator
         .filter(g => (constMask & (1 << g)) == 0)
         .map(g => weights((p.field, p.term, g)).toDouble).sum
-      new Cursor(p, (wSum * (1.0 + 1e-6)).toFloat, caches(p.field), i,
+      new Cursor(p, (wSum * (1.0 + 1e-6)).toFloat, caches(p.field).f32,
         if (shared == null) stats else None, shared)
     }
     val cursorsOfGroup: Array[Array[Int]] =
@@ -337,17 +317,7 @@ object Wand {
       cursors.foreach(_.skipRemaining()) // a required group has no terms here
       return Iterator.empty
     }
-    val heap = new java.util.PriorityQueue[Hit](k, (a: Hit, b: Hit) =>
-      if (worseThan(a.score, a.docId, b.score, b.docId)) -1
-      else if (worseThan(b.score, b.docId, a.score, a.docId)) 1
-      else 0)
-    def thresholdScore: Float = if (heap.size() < k) Float.NegativeInfinity else heap.peek().score
-    def offer(docId: Long, score: Float): Unit = {
-      if (heap.size() < k) heap.add(Hit(docId, score))
-      else if (worseThan(heap.peek().score, heap.peek().docId, score, docId)) {
-        heap.poll(); heap.add(Hit(docId, score))
-      }
-    }
+    val heap = new Scorer.TopKHeap(k)
     val constSeen = new Array[Boolean](nGroups)
 
     var done = false
@@ -374,7 +344,7 @@ object Wand {
           if ((constMask & (1 << g)) != 0) ub += 1.0f
           g += 1
         }
-        if (ub < thresholdScore) {
+        if (ub < heap.threshold) {
           cursors.foreach(_.skipRemaining())
           done = true
         } else {
@@ -414,7 +384,7 @@ object Wand {
                 }
                 ci += 1
               }
-              if (bub >= thresholdScore) {
+              if (bub >= heap.threshold) {
                 // exact f32 score, exhaustive accumulation order
                 var s = 0.0f
                 java.util.Arrays.fill(constSeen, false)
@@ -438,7 +408,7 @@ object Wand {
                   }
                   ci += 1
                 }
-                offer(cand, s)
+                heap.offer(s, cand, s)
               }
             }
             ci = 0
@@ -449,8 +419,7 @@ object Wand {
         }
       }
     }
-    import scala.jdk.CollectionConverters._
-    heap.iterator().asScala.map(h => ScoredDocF32(h.docId, h.score)).toArray.iterator
+    kept(heap)
   }
 
   /** Top-k for a multi-group all-required conjunction; exact w.r.t. the
@@ -461,206 +430,145 @@ object Wand {
       stats: Option[Stats] = None): Dataset[ScoredDocF32] = {
     require(cq.groups.nonEmpty && cq.groups.forall(_.required),
       "conjunction WAND covers all-required multi-group queries")
+    // a group with no dictionary matches anywhere → empty intersection
+    if (cq.groups.exists(g => !cq.terms.exists(_.group == g.id))) {
+      val spark = index.spark
+      import spark.implicits._
+      spark.emptyDataset[ScoredDocF32]
+    } else walkOne(index, cq, conj = true, k, deletes, stats)
+  }
+
+  /** One query's WAND walk over every shard. `k` is capped at the shard
+    * width (a shard holds no more docs), which bounds the heap
+    * allocation under a huge LIMIT.
+    */
+  private def walkOne(index: BuiltIndex, cq: CompiledQuery, conj: Boolean, k: Int,
+      deletes: Option[Dataset[Long]], stats: Option[Stats]): Dataset[ScoredDocF32] = {
     val spark = index.spark
     import spark.implicits._
-    val weights: Map[(String, String, Int), Float] =
-      cq.terms.map(t => (t.field, t.term, t.group) -> t.weightF32).toMap
-    val groupOf: Map[(String, String), Seq[Int]] =
-      cq.terms.groupBy(t => (t.field, t.term)).map { case (kk, v) => kk -> v.map(_.group).sorted }
-    val constMask = cq.groups.filter(_.constScore).map(g => 1 << g.id).sum
-    val nGroups = cq.groups.size
-    val caches: Map[String, Array[Float]] =
-      cq.terms.map(_.field).distinct.map(f => f -> Bm25.normCacheF32(index.avgFieldnormF32(f))).toMap
-    val kk = k
-    // a group with no dictionary matches anywhere → empty intersection
-    val groupsWithTerms = cq.terms.map(_.group).toSet
-    if ((0 until nGroups).exists(g => !groupsWithTerms.contains(g)))
-      return spark.emptyDataset[ScoredDocF32]
+    val plan = wandPlan(0, cq)
+    val caches = Scorer.normCaches(index, cq.terms)
+    val kk = math.min(k, index.config.shardDocs)
+    // tombstones (when present) stay cogrouped per shard inside
+    // shardGrouped's fallback: WAND must exclude them DURING scoring so
+    // the heap fills with live docs — a post-hoc anti-join would
+    // under-fill the top-k
     Scorer.shardGrouped(index, cq.terms, deletes) { (rows, dels) =>
-      wandShardConj(rows, weights, groupOf, caches, constMask, nGroups, kk, dels, stats)
+      plan.walk(conj, rows, caches, kk, dels, stats, null)
     }
   }
 
-  /** Driver-compiled routing + replay data for ONE query of a batch.
-    * Route mirrors searchF32's cost gates exactly, so a query runs the
-    * same algorithm batched as it would alone: 0 = single-group
-    * sum-scored WAND, 1 = all-required conjunction WAND, 2 = exhaustive
-    * replay (dense or irregular shapes, where block skipping loses to
-    * the hash scorer).
+  /** Cost gate for single-group (disjunction) WAND: block-max skips
+    * happen when at least one term is selective — its high-idf hits
+    * push the top-k threshold above the dense terms' block maxima (93%
+    * of the hot term's blocks skipped on the rare+hot shape at 2M docs,
+    * BENCH.md). A uniformly dense disjunction (every term hot) never
+    * lifts the threshold past any block max, skips nothing, and pays
+    * pure cursor bookkeeping (measured 0.94x vs exhaustive) — it takes
+    * the exhaustive scorer instead. This and conjSelective are the ONE
+    * definition of the WAND gates: QueryEngine.searchF32 routes on them
+    * and batchWandRoutable builds on them.
     */
-  private final case class BatchPlan(
+  def disjSelective(cq: CompiledQuery, numDocs: Long): Boolean =
+    cq.groups.size == 1 && !cq.groups.head.constScore && cq.terms.map(_.df).min * 4 <= numDocs
+
+  /** Cost gate for conjunction WAND (all-required multi-group queries):
+    * leapfrog + block-max pays off when at least one required group is
+    * selective (the intersection is sparse and the other groups' blocks
+    * get skipped between its postings — measured 1.8x at 2M docs). A
+    * dense-x-dense conjunction has nothing to skip and the
+    * per-candidate bookkeeping just loses to the exhaustive scorer
+    * (measured +24%), so it stays there.
+    */
+  def conjSelective(cq: CompiledQuery, numDocs: Long): Boolean =
+    cq.groups.size > 1 && cq.groups.forall(_.required) &&
+      cq.groups.map(g => cq.terms.filter(_.group == g.id).map(_.df).sum).min * 4 <= numDocs
+
+  /** Is `cq` a shape the batched WAND pass (topKMany) takes? The
+    * single-query gates, every conjunction group with terms, PLUS a
+    * batch-only density bound on disjunctions: per-(query, shard) WAND
+    * setup + per-doc bookkeeping is paid once in the single-query path
+    * but multiplied by batch width x shard count here, while the
+    * exhaustive kernel's extra cost is one shardDocs array scan per
+    * (query, shard). A query whose terms match a large fraction of the
+    * corpus walks nearly every posting WITH bookkeeping and skips almost
+    * nothing (27M skew leg: WAND 3.1x SLOWER than exhaustive at sum-df
+    * ~ 0.6N, while sparse mixes run 1.8x FASTER). The batch caller
+    * (searchManyF32) partitions on this: routable queries run in
+    * topKMany, the rest in the exhaustive kernel (Scorer.scoreMany).
+    */
+  def batchWandRoutable(cq: CompiledQuery, numDocs: Long): Boolean =
+    (disjSelective(cq, numDocs) && cq.terms.map(_.df).sum * 2 <= numDocs) ||
+      (conjSelective(cq, numDocs) && cq.groups.forall(g => cq.terms.exists(_.group == g.id)))
+
+  /** Driver-compiled data for ONE query's WAND walk: the disjunction
+    * walk reads weightsFT, the conjunction walk the rest.
+    */
+  private final case class WandPlan(
       qid: Int,
-      route: Int,
-      order: Array[(String, String)], // (minGroup, field, term) replay order
-      weightsFT: Map[(String, String), Float], // route 0
+      keys: Array[(String, String)],
+      weightsFT: Map[(String, String), Float],
       weights: Map[(String, String, Int), Float],
       groupOf: Map[(String, String), Seq[Int]],
       constMask: Int,
-      reqMask: Int,
-      nGroups: Int)
+      nGroups: Int) {
+    def walk(conj: Boolean, rows: Array[PostingRow], caches: Map[String, Scorer.NormCache],
+        k: Int, deleted: Set[Long], stats: Option[Stats], shared: BlockCache): Iterator[ScoredDocF32] =
+      if (conj) wandShardConj(rows, weights, groupOf, caches, constMask, nGroups, k, deleted, stats, shared)
+      else wandShard(rows, weightsFT, caches, k, deleted, stats, shared)
+  }
 
-  /** Is `cq` a shape the batched WAND path should take? The single-
-    * query gates (selective disjunction / all-required selective
-    * conjunction) PLUS the batch density bound on disjunctions (see
-    * topKMany). The batch caller (searchManyF32) partitions on this:
-    * routable queries run here with shared-cache pruning, everything
-    * else runs the exhaustive Scorer batch pass — per-query
-    * WAND bookkeeping at batch-width x shard-count scale only pays on
-    * sparse match sets (27M skew leg: dense queries through per-query
-    * walks ran 3x slower than the hash replay).
-    */
-  def batchWandRoutable(cq: CompiledQuery, numDocs: Long): Boolean = {
-    val groupsWithTerms = cq.terms.map(_.group).toSet
-    val disjOk = cq.groups.size == 1 && !cq.groups.head.constScore &&
-      cq.terms.map(_.df).min * 4 <= numDocs &&
-      cq.terms.map(_.df).sum * 2 <= numDocs
-    val conjOk = cq.groups.size > 1 && cq.groups.forall(_.required) &&
-      cq.groups.forall(g => groupsWithTerms.contains(g.id)) && {
-        val minGroupDf =
-          cq.groups.map(g => cq.terms.filter(_.group == g.id).map(_.df).sum).min
-        minGroupDf * 4 <= numDocs
-      }
-    disjOk || conjOk
+  private def wandPlan(qid: Int, cq: CompiledQuery): WandPlan = {
+    val groupOf: Map[(String, String), Seq[Int]] = cq.terms
+      .groupBy(t => (t.field, t.term)).map { case (kk, v) => kk -> v.map(_.group).distinct.sorted }
+    WandPlan(qid, groupOf.keys.toArray,
+      cq.terms.map(t => (t.field, t.term) -> t.weightF32).toMap,
+      cq.terms.map(t => (t.field, t.term, t.group) -> t.weightF32).toMap,
+      groupOf, cq.groups.filter(_.constScore).map(g => 1 << g.id).sum, cq.groups.size)
   }
 
   /** Batched multi-query top-k with SHARED lazy block decoding — the
     * serving-throughput path with single-query WAND's pruning grafted
-    * on. Each query replays via the exact algorithm the single-query
-    * path would pick for it (same cost gates), but all queries of a
+    * on. Takes only batchWandRoutable queries; each runs the WAND walk
+    * the single-query path would pick for it, but all queries of a
     * shard draw decoded blocks from one BlockCache: a block decodes at
-    * most once per shard, and ONLY if some query's WAND walk (or an
-    * exhaustive-shape query subscribed to its term) actually needs it —
-    * blocks beyond every subscribing query's threshold horizon are
+    * most once per shard, and ONLY if some query's walk actually needs
+    * it — blocks beyond every subscribing query's threshold horizon are
     * never touched. Per-query results stay bit-identical to searchF32
-    * (BatchSearchSpec): WAND routes are exact by the WandSpec
-    * invariant, and the exhaustive route accumulates in the
-    * single-query order. Reference semantics: tantivy BlockWAND
-    * (Cargo.lock:242) applied per query of lnx's concurrent search
-    * load.
+    * (BatchSearchSpec) by the WandSpec exactness invariant. Reference
+    * semantics: tantivy BlockWAND (Cargo.lock:242) applied per query of
+    * lnx's concurrent search load.
     */
   def topKMany(index: BuiltIndex, queries: Seq[(Int, CompiledQuery)], k: Int,
       deletes: Option[Dataset[Long]] = None,
       stats: Option[Stats] = None): Dataset[ScoredQDocF32] = {
     val spark = index.spark
     import spark.implicits._
-    val numDocs = index.numDocs
-    val plans = queries.map { case (qid, cq) =>
-      val groupOf: Map[(String, String), Seq[Int]] = cq.terms
-        .groupBy(t => (t.field, t.term)).map { case (kk, v) => kk -> v.map(_.group).distinct.sorted }
-      val order = groupOf.keys.toArray.sortBy(kk => (groupOf(kk).min, kk._1, kk._2))
-      val constMask = cq.groups.filter(_.constScore).map(g => 1 << g.id).sum
-      val groupsWithTerms = cq.terms.map(_.group).toSet
-      // the same selectivity gates as searchF32, PLUS a batch-specific
-      // density bound on the total match set: per-(query, shard) WAND
-      // setup + per-doc bookkeeping is paid once in the single-query
-      // path but multiplied by batch width x shard count here, while
-      // the exhaustive replay's extra cost is one shardDocs array scan
-      // per (query, shard). A query whose terms match a large fraction
-      // of the corpus walks nearly every posting WITH bookkeeping and
-      // skips almost nothing (27M skew leg: WAND 3.1x SLOWER than
-      // exhaustive at sum-df ~ 0.6N, while sparse mixes run 1.8x
-      // FASTER) — route dense queries to the replay.
-      val disjOk = cq.groups.size == 1 && !cq.groups.head.constScore &&
-        cq.terms.map(_.df).min * 4 <= numDocs &&
-        cq.terms.map(_.df).sum * 2 <= numDocs
-      val conjOk = cq.groups.size > 1 && cq.groups.forall(_.required) &&
-        cq.groups.forall(g => groupsWithTerms.contains(g.id)) && {
-          val minGroupDf =
-            cq.groups.map(g => cq.terms.filter(_.group == g.id).map(_.df).sum).min
-          minGroupDf * 4 <= numDocs
-        }
-      BatchPlan(qid, if (disjOk) 0 else if (conjOk) 1 else 2, order,
-        cq.terms.map(t => (t.field, t.term) -> t.weightF32).toMap,
-        cq.terms.map(t => (t.field, t.term, t.group) -> t.weightF32).toMap,
-        groupOf, constMask, cq.requiredMask, cq.groups.size)
-    }.toArray
+    require(queries.forall(q => batchWandRoutable(q._2, index.numDocs)),
+      "topKMany takes batchWandRoutable queries only; score the rest with Scorer.scoreMany")
+    val plans = queries.map { case (qid, cq) => wandPlan(qid, cq) }.toArray
     val allTerms = queries.flatMap(_._2.terms)
-    val caches: Map[String, Array[Float]] =
-      allTerms.map(_.field).distinct.map(f => f -> Bm25.normCacheF32(index.avgFieldnormF32(f))).toMap
-    val shardDocs = index.config.shardDocs
-    val kk = k
+    val caches = Scorer.normCaches(index, allTerms)
+    val kk = math.min(k, index.config.shardDocs)
     Scorer.shardGrouped(index, allTerms, deletes) { (rows, dels) =>
-      batchShard(rows, plans, caches, shardDocs, kk, dels, stats)
+      batchShard(rows, plans, caches, kk, dels, stats)
     }
   }
 
-  private def batchShard(rows: Array[PostingRow], plans: Array[BatchPlan],
-      caches: Map[String, Array[Float]], shardDocs: Int, k: Int,
+  private def batchShard(rows: Array[PostingRow], plans: Array[WandPlan],
+      caches: Map[String, Scorer.NormCache], k: Int,
       deleted: Set[Long], stats: Option[Stats]): Iterator[ScoredQDocF32] = {
     if (rows.isEmpty || k <= 0) return Iterator.empty
     val cache = new BlockCache(stats)
     rows.foreach(cache.register)
-    // arrival-order rows per key (one row per epoch segment): replay
-    // order within a key is arrival order, matching the single-query
-    // merge's STABLE sort over equal keys
-    val rowsOfKey = new scala.collection.mutable.LinkedHashMap[(String, String),
-      scala.collection.mutable.ArrayBuffer[PostingRow]]
-    rows.foreach(p => rowsOfKey.getOrElseUpdate((p.field, p.term),
-      scala.collection.mutable.ArrayBuffer.empty) += p)
-    val base = rows(0).shard.toLong * shardDocs
-    // scratch arrays shared by every exhaustive-replay query of the shard
-    var score: Array[Float] = null
-    var mask: Array[Int] = null
+    // rows per key keep arrival order (one row per epoch segment): the
+    // walks' stable sorts then see them as the single-query path does
+    val rowsOfKey = rows.groupBy(p => (p.field, p.term))
     val out = Seq.newBuilder[ScoredQDocF32]
     plans.foreach { q =>
-      val qRows = q.order.iterator.flatMap(rowsOfKey.getOrElse(_, Nil)).toArray
-      if (qRows.nonEmpty) q.route match {
-        case 0 =>
-          wandShard(qRows, q.weightsFT, caches, k, deleted, stats, cache)
-            .foreach(h => out += ScoredQDocF32(q.qid, h.docId, h.score))
-        case 1 =>
-          wandShardConj(qRows, q.weights, q.groupOf, caches, q.constMask, q.nGroups,
-            k, deleted, stats, cache)
-            .foreach(h => out += ScoredQDocF32(q.qid, h.docId, h.score))
-        case _ =>
-          // exhaustive replay, bit-identical accumulation order to
-          // Scorer.mergeShardF32: keys (minGroup, field, term) sorted,
-          // rows within a key in arrival order, groups ascending,
-          // docIds ascending — every decode through the shared cache
-          if (score == null) {
-            score = new Array[Float](shardDocs); mask = new Array[Int](shardDocs)
-          } else {
-            java.util.Arrays.fill(score, 0.0f); java.util.Arrays.fill(mask, 0)
-          }
-          q.order.foreach { key =>
-            rowsOfKey.get(key).foreach { prs =>
-              val fcache = caches(key._1)
-              prs.foreach { p =>
-                val blocks = cache.decodeRow(p)
-                q.groupOf(key).foreach { g =>
-                  val gBit = 1 << g
-                  val isConst = (q.constMask & gBit) != 0
-                  val w = q.weights((key._1, key._2, g))
-                  var bi = 0
-                  while (bi < blocks.length) {
-                    val dec = blocks(bi)
-                    var i = 0
-                    while (i < dec.docIds.length) {
-                      val o = (dec.docIds(i) - base).toInt
-                      if (isConst) {
-                        if ((mask(o) & gBit) == 0) score(o) += 1.0f
-                      } else {
-                        score(o) += Bm25.tfScoreF32(w, dec.tfs(i), fcache(dec.norms(i)))
-                      }
-                      mask(o) |= gBit
-                      i += 1
-                    }
-                    bi += 1
-                  }
-                }
-              }
-            }
-          }
-          val heap = new Scorer.TopKHeap(math.max(1, math.min(k, shardDocs)))
-          var o = 0
-          while (o < shardDocs) {
-            if ((mask(o) & q.reqMask) == q.reqMask && mask(o) != 0 &&
-                !deleted.contains(base + o))
-              heap.offer(score(o).toDouble, base + o, score(o).toDouble)
-            o += 1
-          }
-          heap.foreachKept((d, s) => out += ScoredQDocF32(q.qid, d, s.toFloat))
-      }
+      val qRows = q.keys.flatMap(rowsOfKey.getOrElse(_, Array.empty[PostingRow]))
+      if (qRows.nonEmpty) q.walk(q.nGroups > 1, qRows, caches, k, deleted, stats, cache)
+        .foreach(h => out += ScoredQDocF32(q.qid, h.docId, h.score))
     }
     cache.finish()
     out.result().iterator
@@ -674,19 +582,6 @@ object Wand {
       stats: Option[Stats] = None): Dataset[ScoredDocF32] = {
     require(cq.groups.size == 1 && !cq.groups.head.constScore,
       "WAND path covers single-group sum-scored queries; use Scorer for the rest")
-    val spark = index.spark
-    import spark.implicits._
-    val weights: Map[(String, String), Float] =
-      cq.terms.map(t => (t.field, t.term) -> t.weightF32).toMap
-    val caches: Map[String, Array[Float]] =
-      cq.terms.map(_.field).distinct.map(f => f -> Bm25.normCacheF32(index.avgFieldnormF32(f))).toMap
-    val kk = k
-    // tombstones (when present) stay cogrouped per shard inside
-    // shardGrouped's fallback: WAND must exclude them DURING scoring so
-    // the heap fills with live docs — a post-hoc anti-join would
-    // under-fill the top-k
-    Scorer.shardGrouped(index, cq.terms, deletes) { (rows, dels) =>
-      wandShard(rows, weights, caches, kk, dels, stats)
-    }
+    walkOne(index, cq, conj = false, k, deletes, stats)
   }
 }

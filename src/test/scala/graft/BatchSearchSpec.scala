@@ -75,8 +75,8 @@ class BatchSearchSpec extends AnyFunSuite {
 
   test("below the split floor the whole batch runs exhaustive: no WAND pass, no block cache") {
     // this suite's corpus (1500 docs) is far below the default floor
-    // (BatchSplitMinDocs = 1M), so the accounting counters must stay
-    // untouched — the single-job exhaustive replay never registers
+    // (BatchSplitMinDocs = 4M), so the accounting counters must stay
+    // untouched — the single-job exhaustive kernel never registers
     // blocks with a shared cache
     val stats = Wand.Stats.register(spark)
     engine.searchManyF32(batch, 10, wandStats = Some(stats)).collect()
@@ -151,7 +151,7 @@ class BatchSearchSpec extends AnyFunSuite {
     // and accounts the never-touched rest at shard close: the two
     // counters partition the matched posting blocks of the
     // WAND-ROUTABLE subset exactly (dense queries take the exhaustive
-    // Scorer pass, outside the cache's accounting)
+    // kernel, outside the cache's accounting)
     val cqs = new QueryEngine(index).compileMany(batch.map(_._2))
     val routable = cqs.filter(cq =>
       cq.terms.nonEmpty && Wand.batchWandRoutable(cq, index.numDocs))
@@ -290,11 +290,28 @@ class BatchSearchSpec extends AnyFunSuite {
     // match-set size
     val k = 5
     val cq = engine.compile(Seq(Fts("content", "fn")))
-    val cand = Scorer.scoreManyF32(index, Seq(0 -> cq), k, None)
+    val cand = Scorer.scoreMany(index, Seq(0 -> cq), k, Precision.F32)
     val nShards = math.ceil(index.numDocs.toDouble / index.config.shardDocs).toInt
     val n = cand.count()
     val full = engine.matchF32(Seq(Fts("content", "fn"))).count()
     assert(n <= nShards.toLong * k, s"candidates $n exceed shards($nShards) x k($k)")
     assert(full > n, "test premise: the match set must exceed the candidate bound")
+  }
+
+  test("Wand.topKMany takes WAND-routable queries only") {
+    // the batch WAND pass has no exhaustive route of its own:
+    // searchManyF32 partitions on batchWandRoutable and hands the rest
+    // to the exhaustive kernel, so a non-routable query here is a
+    // caller bug that must fail loudly, alone or inside a batch
+    val constScore = engine.compile(Seq(LevC("content", "licens")))
+    assert(constScore.terms.nonEmpty && !Wand.batchWandRoutable(constScore, index.numDocs),
+      "test premise: a const-score query is never WAND-routable")
+    val routable = engine.compileMany(batch.map(_._2))
+      .find(cq => cq.terms.nonEmpty && Wand.batchWandRoutable(cq, index.numDocs))
+      .getOrElse(fail("test premise: some batch query is WAND-routable"))
+    Wand.topKMany(index, Seq(0 -> routable), 5).collect()
+    intercept[IllegalArgumentException](Wand.topKMany(index, Seq(0 -> constScore), 5))
+    intercept[IllegalArgumentException](
+      Wand.topKMany(index, Seq(0 -> routable, 1 -> constScore), 5))
   }
 }

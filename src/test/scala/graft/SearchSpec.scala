@@ -72,6 +72,38 @@ class SearchSpec extends AnyFunSuite {
     }
   }
 
+  test("every exhaustive-kernel entry point is bit-identical to the analytic oracle") {
+    // the single-query exhaustive route, both batch split regimes and
+    // the unlimited match set share one scoring kernel, so batch-vs-
+    // single specs compare that kernel with itself; this ties each
+    // entry point to the independent oracle instead
+    val k = 10
+    val qs = Seq("binary search", "fn return license", "merge segment posting list",
+      "checkpoint epoch", "needle")
+    val batch = qs.zipWithIndex.map { case (q, i) => i -> Seq[SearchClause](Fts("content", q)) }
+    def perQid(df: DataFrame): Map[Int, Seq[(Long, Float)]] = df.collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getFloat(2))).groupBy(_._1).view
+      .mapValues(_.map(t => (t._2, t._3)).toSeq.sortBy { case (d, s) => (-s, d) }).toMap
+    val exhaustiveBatch = perQid(engine.searchManyF32(batch, k))
+    // split floor forced off: WAND-routable queries take Wand.topKMany
+    spark.conf.set("graft.batch.splitMinDocs", "0")
+    val splitBatch =
+      try perQid(engine.searchManyF32(batch, k))
+      finally spark.conf.unset("graft.batch.splitMinDocs")
+    def rows(df: DataFrame): Seq[(Long, Float)] =
+      df.collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
+    batch.foreach { case (qid, clauses) =>
+      val q = qs(qid)
+      val expected = BruteOracle.topK(
+        BruteOracle.ftsScores(rawDocs, engine.tokenizeQuery("content", q)), k)
+      assert(expected.nonEmpty, s"test premise: '$q' matches")
+      assert(rows(engine.searchF32(clauses, k, useWand = false)) === expected, s"exhaustive '$q'")
+      assert(exhaustiveBatch.getOrElse(qid, Nil) === expected, s"batch, all exhaustive, '$q'")
+      assert(splitBatch.getOrElse(qid, Nil) === expected, s"batch, split, '$q'")
+      assert(rows(Scorer.topK(engine.matchF32(clauses), k)) === expected, s"matchF32 top-k '$q'")
+    }
+  }
+
   test("rare planted needle found with exact score") {
     val expected = BruteOracle.topK(BruteOracle.ftsScores(rawDocs, Seq("needle")), 5)
     assert(expected.nonEmpty)
